@@ -40,7 +40,9 @@ def main() -> None:
     ap.add_argument("--output", required=True, help="output root dir")
     ap.add_argument("--run-id", required=True)
     ap.add_argument("--n-buckets", type=int, default=32,
-                    help="checkpoint granularity; cluster-scale: O(10k)")
+                    help="checkpoint granularity: a resume skips or reruns whole "
+                         "buckets; not the task count, which follows the "
+                         "cores; cluster-scale: O(10k)")
     ap.add_argument("--salt-block", type=int, default=64,
                     help="turns of one conversation per salt bucket (skew bound)")
     ap.add_argument("--wave-buckets", type=int, default=None,

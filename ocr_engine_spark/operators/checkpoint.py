@@ -161,7 +161,7 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
         pending = bucketed
         if len(wave) < n_buckets:
             pending = bucketed.where(F.col("p").isin(wave))
-        _run_wave(spark, pending, run_id, len(wave), cfg,
+        _run_wave(spark, pending, wave, run_id, cfg,
                   data_path, metrics_path, passthrough, dispatch_desc)
 
     ran = n_buckets - len(done)
@@ -175,66 +175,62 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame, out_dir: str,
     }
 
 
-def _run_wave(spark: SparkSession, pending: DataFrame, run_id: str,
-              n_partitions: int, cfg: EngineConfig,
+def _run_wave(spark: SparkSession, pending: DataFrame, wave: list[int],
+              run_id: str, cfg: EngineConfig,
               data_path: str, metrics_path: str,
               passthrough: tuple[str, ...] = (),
               dispatch_desc: str = _dispatch_desc(False, None)) -> None:
-    """One durable commit unit: extract `pending`, write its data, then its
-    metrics (the done-markers, strictly after the data)."""
+    """One durable commit unit: extract `pending` (the rows of buckets
+    `wave`), write its data, then its metrics (the done-markers, strictly
+    after the data).
+
+    The exchange is sized by cores, not buckets: each bucket still lands
+    whole in one task (one file per ``p=`` directory), but the kernel stage
+    runs as at most ``defaultParallelism`` Python tasks, so the fixed
+    per-task worker cost is paid per core instead of per bucket.  The kernel
+    output is written straight from that stage; the metrics then read back
+    only this wave's ``p=`` directories, pruned to the four columns they
+    aggregate.  A bucket with no rows writes no directory and gets no
+    done-marker."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     started = time.time()
-    if not pending.isEmpty():  # short-circuit probe, no extra full-count job
-        from pyspark.sql.types import IntegerType, StructField, StructType
+    # fresh StructType: .add() would mutate the shared EXTRACTED_SCHEMA
+    out_schema = StructType(
+        list(EXTRACTED_SCHEMA.fields)
+        + [pending.schema[c] for c in passthrough]
+        + [StructField("p", IntegerType())])
+    n_tasks = min(len(wave), spark.sparkContext.defaultParallelism)
+    overwrite_partitions(
+        pending.repartition(n_tasks, "p").mapInArrow(
+            _extract_batches_arrow(cfg, (*passthrough, "p")),
+            schema=out_schema),
+        data_path, "p")
 
-        # fresh StructType: .add() would mutate the shared EXTRACTED_SCHEMA
-        out_schema = StructType(
-            list(EXTRACTED_SCHEMA.fields)
-            + [pending.schema[c] for c in passthrough]
-            + [StructField("p", IntegerType())])
-        from pyspark import StorageLevel
-
-        extracted = (
-            pending.repartition(n_partitions, "p")
-            .mapInArrow(
-                _extract_batches_arrow(cfg, (*passthrough, "p")),
-                schema=out_schema)
+    finished = time.time()
+    written = [d for d in (os.path.join(data_path, f"p={p}") for p in wave)
+               if os.path.isdir(d)]
+    if not written:
+        return
+    metrics = (
+        spark.read.schema(StructType(
+            [out_schema[c] for c in ("p", "conv_id", "n_spans", "strip_ratio")]))
+        .option("basePath", data_path).parquet(*written)
+        .groupBy("p")
+        .agg(
+            F.countDistinct("conv_id").alias("conv_ids"),
+            F.count(F.lit(1)).alias("turns"),
+            F.sum("n_spans").cast("long").alias("spans"),
+            F.avg("strip_ratio").alias("strip_ratio"),
         )
-        # one pass over the input: the kernel output is persisted, the data write
-        # consumes it, and the metrics aggregation reuses the SAME materialization
-        # — the input is scanned once and the freshly-written output is never read
-        # back (the previous spelling re-read the entire output dataset per run).
-        # DISK_ONLY, not MEMORY_AND_DISK: memory caching unrolls a whole bucket
-        # partition into storage memory and OOMs small heaps on fat buckets,
-        # while disk blocks stream out incrementally (measured: a 1.1M-turn /
-        # 4-bucket run OOMs a default 1g driver with memory caching and passes
-        # with disk-only)
-        extracted.persist(StorageLevel.DISK_ONLY)
-        try:
-            overwrite_partitions(extracted, data_path, "p")
-
-            # lineage + metrics AFTER data commit: a bucket missing its metrics row
-            # reruns; `extracted` holds only pending buckets, so no done-filter
-            finished = time.time()
-            metrics = (
-                extracted.groupBy("p")
-                .agg(
-                    F.countDistinct("conv_id").alias("conv_ids"),
-                    F.count(F.lit(1)).alias("turns"),
-                    F.sum("n_spans").cast("long").alias("spans"),
-                    F.avg("strip_ratio").alias("strip_ratio"),
-                )
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("started", F.lit(started).cast("timestamp"))
-                .withColumn("finished", F.lit(finished).cast("timestamp"))
-                .withColumn("status", F.lit("done"))
-                .withColumn("dispatch", F.lit(dispatch_desc))
-            )
-            overwrite_partitions(
-                metrics.select(
-                    "run_id", "conv_ids", "turns", "spans", "strip_ratio",
-                    "started", "finished", "status", "dispatch", "p",
-                ), metrics_path, "p")
-        finally:
-            extracted.unpersist()
-
-
+        .withColumn("run_id", F.lit(run_id))
+        .withColumn("started", F.lit(started).cast("timestamp"))
+        .withColumn("finished", F.lit(finished).cast("timestamp"))
+        .withColumn("status", F.lit("done"))
+        .withColumn("dispatch", F.lit(dispatch_desc))
+    )
+    overwrite_partitions(
+        metrics.select(
+            "run_id", "conv_ids", "turns", "spans", "strip_ratio",
+            "started", "finished", "status", "dispatch", "p",
+        ), metrics_path, "p")

@@ -12,6 +12,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ocr_engine_spark.operators.checkpoint import derive_output_keys
 from ocr_engine_spark.operators.extract import extract_transcripts
 from ocr_engine_spark.operators.relational import load
 
@@ -368,8 +369,6 @@ def q_output_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E14 output-key derivation (/root/reference/src/utils.py:251-269) as a pure
     column expression over the corpus — the per-row output naming the reference
     does with os.path joins, with no Python in the plan."""
-    from ocr_engine_spark.operators.checkpoint import derive_output_keys
-
     docs = load(spark, sf_dir, "documents")
     as_turns = docs.select(
         F.col("doc_id"),

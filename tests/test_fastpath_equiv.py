@@ -190,14 +190,13 @@ def test_nondefault_configs_match_oracle():
 
 
 def test_bench_corpus_slice_matches_oracle():
-    pq = pytest.importorskip("pyarrow.parquet")
-    import pathlib
+    """The first 4,000 turns of the seed-7 bench corpus.  Turns are generated
+    conversation by conversation from one seeded stream, so 400 conversations
+    give the same leading rows as the full bench corpus."""
+    from ocr_engine_spark.sources.transcripts import generate_transcripts
 
-    p = pathlib.Path(__file__).resolve().parents[1] / "BENCH" / "transcripts_bench.parquet"
-    if not p.exists():
-        pytest.skip("bench corpus not present")
-    pdf = pq.read_table(str(p), columns=["conv_id", "turn_idx", "text"]) \
-        .slice(0, 4000).to_pandas()
+    pdf = generate_transcripts(400, seed=7).iloc[:4000][
+        ["conv_id", "turn_idx", "text"]].reset_index(drop=True)
     out = extract_frame(pdf)
     for i in range(len(pdf)):
         want = extract_turn(pdf["text"].iat[i] or "")

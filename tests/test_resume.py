@@ -1,6 +1,7 @@
 """Checkpoint/resume tests (SURVEY.md §5.2 item 5): a killed run resumed with the same
 run_id yields output identical to a single run, with no duplicate rows."""
 
+import os
 import shutil
 
 import pytest
@@ -88,26 +89,98 @@ def test_metrics_lineage_content(spark, transcripts_df, tmp_path):
                               "strip_ratio", "started", "finished", "status", "p"}
 
 
-def test_metrics_never_reread_fresh_output(spark, transcripts_df, tmp_path,
-                                           monkeypatch):
-    """The metrics aggregation must reuse the persisted kernel output, not
-    spark.read.parquet() the dataset the run just wrote (at scale that re-read is a
-    second full pass over everything written)."""
+def test_metrics_read_back_only_wave_columns(spark, transcripts_df, tmp_path,
+                                             monkeypatch):
+    """Each wave's metrics read back only that wave's committed ``p=``
+    directories, pruned to the four columns they aggregate: never a second
+    full pass over the output the run just wrote."""
     from pyspark.sql import DataFrameReader
 
-    out = str(tmp_path / "noreread")
+    import ocr_engine_spark.operators.checkpoint as cp
+    from ocr_engine_spark.plans import read_schemas
+
+    out = str(tmp_path / "readback")
     data_path = f"{out}/extracted"
-    read_paths = []
-    orig = DataFrameReader.parquet
+    read_paths, metrics_scans = [], []
+    real_read, real_write = DataFrameReader.parquet, cp.overwrite_partitions
 
-    def spy(self, *paths, **kw):
-        read_paths.extend(paths)
-        return orig(self, *paths, **kw)
+    def read_spy(self, *paths, **kw):
+        read_paths.append(sorted(paths))
+        return real_read(self, *paths, **kw)
 
-    monkeypatch.setattr(DataFrameReader, "parquet", spy)
-    run_extraction(spark, transcripts_df, out, "rD", n_buckets=N_BUCKETS)
-    assert all(p != data_path for p in read_paths), (
-        f"run re-read its own output: {read_paths}")
+    def write_spy(df, target, partition_col, flavor="auto"):
+        if target == f"{out}/run_metrics":
+            metrics_scans.extend(read_schemas(df))
+        return real_write(df, target, partition_col, flavor)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", read_spy)
+    monkeypatch.setattr(cp, "overwrite_partitions", write_spy)
+    run_extraction(spark, transcripts_df, out, "rD", n_buckets=N_BUCKETS,
+                   wave_buckets=3)
+    waves = ([0, 1, 2], [3, 4, 5], [6, 7])
+    assert read_paths == [[f"{data_path}/p={p}" for p in w] for w in waves]
+    assert metrics_scans == (
+        ["struct<conv_id:string,n_spans:int,strip_ratio:double>"] * len(waves))
+
+
+def test_empty_input_and_empty_buckets(spark, transcripts_df, tmp_path):
+    """A bucket with no rows writes no ``p=`` directory: the metrics read-back
+    skips it, and a wave with no rows at all writes no done-markers."""
+    empty = run_extraction(spark, transcripts_df.limit(0),
+                           str(tmp_path / "empty"), "rE", n_buckets=N_BUCKETS)
+    assert done_buckets(spark, empty["metrics_path"]) == set()
+
+    keep = {1, 4}
+    sparse = (with_bucket(transcripts_df, N_BUCKETS)
+              .where(F.col("p").isin(*keep)).drop("p"))
+    # waves [0,1,2] and [3,4,5] each hold one bucket with rows; [6,7] none
+    s = run_extraction(spark, sparse, str(tmp_path / "sparse"), "rE",
+                       n_buckets=N_BUCKETS, wave_buckets=3)
+    assert done_buckets(spark, s["metrics_path"]) == keep
+    assert {d for d in os.listdir(s["data_path"]) if d.startswith("p=")} == {
+        f"p={p}" for p in keep}
+    assert spark.read.parquet(s["metrics_path"]).agg(
+        F.sum("turns")).first()[0] == sparse.count()
+
+
+def test_kernel_tasks_follow_cores_not_buckets(spark, transcripts_df, tmp_path,
+                                               monkeypatch):
+    """n_buckets sets checkpoint granularity, not task count: 32 buckets run
+    the Python kernel stage in at most defaultParallelism tasks, and every
+    bucket still writes exactly one parquet file."""
+    import ocr_engine_spark.operators.checkpoint as cp
+
+    sc = spark.sparkContext
+    group = "checkpoint-data-write"
+    real_write = cp.overwrite_partitions
+
+    def tagged_write(df, target, partition_col, flavor="auto"):
+        if target == data_path:
+            sc.setJobGroup(group, "checkpoint data write")
+        try:
+            return real_write(df, target, partition_col, flavor)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    out = str(tmp_path / "cores")
+    data_path = f"{out}/extracted"
+    monkeypatch.setattr(cp, "overwrite_partitions", tagged_write)
+    run_extraction(spark, transcripts_df, out, "rT", n_buckets=32)
+
+    # the write's last stage that ran is the kernel + write stage (the scan
+    # before the exchange is its own, earlier stage)
+    st = sc.statusTracker()
+    ran = [info for j in st.getJobIdsForGroup(group)
+           for info in map(st.getStageInfo, list(st.getJobInfo(j).stageIds))
+           if info is not None and info.numCompletedTasks]
+    kernel = max(ran, key=lambda info: info.stageId)
+    assert kernel.numCompletedTasks == kernel.numTasks <= sc.defaultParallelism
+
+    buckets = {r.p for r in with_bucket(transcripts_df, 32)
+               .select("p").distinct().collect()}
+    files = {p: os.listdir(f"{data_path}/p={p}") for p in buckets}
+    assert all(len([f for f in fs if f.endswith(".parquet")]) == 1
+               for fs in files.values()), files
 
 
 def test_bucket_assignment_is_deterministic(spark, transcripts_df):
