@@ -7,7 +7,7 @@ Each pipeline stage is also available as a named, registered, Arrow-vectorized
     register_all(spark)
     spark.sql("SELECT ocr_extract(text).extracted_text FROM transcripts")
 
-These wrap the same oracle kernels as the fused ``mapInPandas`` path
+These wrap the same oracle kernels as the fused ``mapInArrow`` path
 (ocr_engine_spark/kernel/*) — the semantics live in exactly one place; the fused path
 remains the production hot path (one Python crossing per batch instead of one per
 expression).  This mirrors the reference's pluggable word-formation surface

@@ -1,9 +1,11 @@
 """Structured Streaming wrapper (SURVEY.md §2.9 — thin v1 surface).
 
-The extraction kernel is stateless per turn, so the SAME fused ``mapInPandas`` stage runs
-unchanged on a streaming DataFrame; no custom stateful operator is needed.  The metrics
-window is a watermarked tumbling aggregation; late data beyond the watermark drops
-(default semantics).  The reference engine is strictly batch (batch_size=1,
+The extraction kernel is stateless per turn, so the SAME fused ``mapInArrow`` stage as
+batch extraction (``operators/extract.extract_transcripts``) runs unchanged on a
+streaming DataFrame: one kernel pass per micro-batch, with ``ts`` riding through as a
+zero-copy passthrough column where a watermark needs it; no custom stateful operator
+is needed.  The metrics window is a watermarked tumbling aggregation; late data
+beyond the watermark drops (default semantics).  The reference engine is strictly batch (batch_size=1,
 /root/reference/src/ocr.py:201-233), so streaming is engine-added surface.
 """
 
@@ -14,9 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ocr_engine_spark.config import DEFAULT_CONFIG, EngineConfig
-from ocr_engine_spark.operators.extract import (
-    EXTRACTED_SCHEMA, _extract_batches, passthrough_wrapper,
-)
+from ocr_engine_spark.operators.extract import extract_transcripts
 
 TRANSCRIPTS_DDL = ("conv_id string, turn_idx int, role string, text string, "
                    "tool string, ts timestamp")
@@ -108,20 +108,19 @@ def read_transcript_stream(spark: SparkSession, path: str,
 
 
 def extract_stream(stream: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Same kernel, streaming plan; keeps ts for downstream watermarks."""
-    pruned = stream.select("conv_id", "turn_idx", "text")
-    return pruned.mapInPandas(_extract_batches(cfg), schema=EXTRACTED_SCHEMA)
+    """Same kernel, streaming plan: the batch operator's single ``mapInArrow``
+    stage with no exchange."""
+    return extract_transcripts(stream, cfg)
 
 
 def metrics_window_stream(stream: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
                           watermark: str = "1 hour",
                           window: str = "10 minutes") -> DataFrame:
     """Watermarked tumbling metrics (turns, spans, strip ratio) over event time."""
-    extracted = stream.select("conv_id", "turn_idx", "text", "ts").mapInPandas(
-        passthrough_wrapper(_extract_batches(cfg), ["ts"]),
-        schema=_schema_with_ts())
     return (
-        extracted.withWatermark("ts", watermark)
+        # ts rides through the kernel zero-copy for the watermark
+        extract_transcripts(stream, cfg, passthrough=("ts",))
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("win"))
         .agg(
             F.count(F.lit(1)).alias("turns"),
@@ -129,8 +128,6 @@ def metrics_window_stream(stream: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
             F.avg("strip_ratio").alias("strip_ratio"),
         )
     )
-
-
 
 
 def dedup_stream(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -155,11 +152,10 @@ def session_metrics_stream(stream: DataFrame,
     ``session_window`` — the streaming twin of the batch sessionization in
     operators/relational.q_event_sessions).  Watermarked, so session state
     closes and evicts as event time advances."""
-    extracted = stream.select("conv_id", "turn_idx", "text", "ts").mapInPandas(
-        passthrough_wrapper(_extract_batches(cfg), ["ts"]),
-        schema=_schema_with_ts())
     return (
-        extracted.withWatermark("ts", watermark)
+        # ts rides through the kernel zero-copy for the watermark
+        extract_transcripts(stream, cfg, passthrough=("ts",))
+        .withWatermark("ts", watermark)
         .groupBy(F.session_window("ts", gap).alias("session"), "conv_id")
         .agg(
             F.count(F.lit(1)).alias("turns"),
@@ -168,13 +164,6 @@ def session_metrics_stream(stream: DataFrame,
             F.max("turn_idx").alias("last_turn"),
         )
     )
-
-
-def _schema_with_ts():
-    from pyspark.sql.types import StructField, StructType, TimestampType
-
-    return StructType(
-        list(EXTRACTED_SCHEMA.fields) + [StructField("ts", TimestampType())])
 
 
 # per-process synthesized stream sources, keyed (sf_dir, documents mtime) so a
@@ -321,7 +310,7 @@ def q_stream_window_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     The synthesized spread-timestamp corpus replays THROUGH THE REAL
     STREAMING PATH: incremental file source (2 files per trigger, so every
     1-hour window accumulates across micro-batches), the extraction kernel
-    as a streaming ``mapInPandas`` stage, event-time tumbling windows, memory
+    as a streaming ``mapInArrow`` stage, event-time tumbling windows, memory
     sink, ``availableNow`` trigger.
 
     Determinism choices, pinned deliberately:

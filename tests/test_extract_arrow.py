@@ -1,5 +1,5 @@
 """Pin the Arrow-boundary kernel (extract_frame_arrow / mapInArrow) to the
-pandas-boundary kernel it mirrors — frame level and Spark level.
+pandas ``extract_frame`` oracle it mirrors — frame level and Spark level.
 
 The two share every stage through _extract_frame_impl; what CAN diverge is the
 output assembly (flat span arrays -> list<struct> vs per-span dicts), the
@@ -105,14 +105,20 @@ def test_empty_batch():
 
 
 @pytest.mark.usefixtures("spark")
-def test_spark_boundary_equivalence(spark):
+def test_spark_matches_pandas_oracle(spark):
+    """The Spark operator (mapInArrow, with a passthrough column) against the
+    pandas ``extract_frame`` oracle on the same rows, every output column."""
     pdf = generate_transcripts(n_convs=120, seed=37)
     df = spark.createDataFrame(pdf)
-    cols = ["conv_id", "turn_idx", "extracted_text", "n_spans", "spans",
-            "fmt", "strip_ratio", "role"]
-    a = (extract_transcripts(df, passthrough=("role",), arrow_boundary=True)
-         .select(*cols).orderBy("conv_id", "turn_idx").collect())
-    b = (extract_transcripts(df, passthrough=("role",), arrow_boundary=False)
-         .select(*cols).orderBy("conv_id", "turn_idx").collect())
-    assert a == b
-    assert len(a) == len(pdf)
+    got = (extract_transcripts(df, passthrough=("role",))
+           .orderBy("conv_id", "turn_idx").collect())
+    want = extract_frame(pdf[["conv_id", "turn_idx", "text"]])
+    want["role"] = pdf["role"].to_numpy()
+    want = want.sort_values(["conv_id", "turn_idx"], kind="stable")
+    assert len(got) == len(want) == len(pdf)
+    assert list(got[0].asDict()) == list(want.columns)
+    for g, w in zip(got, want.itertuples(index=False)):
+        g = g.asDict(recursive=True)
+        w = w._asdict()
+        assert g.pop("spans") == list(w.pop("spans")), g["conv_id"]
+        assert g == w, g["conv_id"]

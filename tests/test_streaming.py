@@ -3,7 +3,10 @@ batch output as the oracle (same kernel -> equality by construction)."""
 
 import pytest
 
-from ocr_engine_spark.operators.extract import extract_transcripts
+from jobs.stream_job import run_stream
+from ocr_engine_spark.operators.extract import (
+    EXTRACTED_SCHEMA, extract_transcripts,
+)
 from ocr_engine_spark.sources.transcripts import generate_transcripts
 from ocr_engine_spark.streaming.stream import (
     extract_stream, metrics_window_stream, read_transcript_stream,
@@ -21,24 +24,26 @@ def stream_dir(spark, tmp_path_factory):
 
 
 def test_stream_extraction_matches_batch(spark, stream_dir):
+    """The full streamed row — every EXTRACTED_SCHEMA column, spans and
+    strip_ratio included — equals the batch operator's row."""
     stream = read_transcript_stream(spark, stream_dir, max_files_per_trigger=2)
     assert stream.isStreaming
+    extracted = extract_stream(stream)
+    assert extracted.schema == EXTRACTED_SCHEMA
     q = (
-        extract_stream(stream)
+        extracted
         .writeStream.format("memory").queryName("ext_stream")
         .outputMode("append").trigger(availableNow=True).start()
     )
     q.awaitTermination(120)
+    cols = EXTRACTED_SCHEMA.names
     got = (
-        spark.table("ext_stream")
-        .select("conv_id", "turn_idx", "extracted_text", "n_spans")
+        spark.table("ext_stream").select(*cols)
         .orderBy("conv_id", "turn_idx").collect()
     )
     batch = extract_transcripts(spark.read.parquet(stream_dir))
-    want = (
-        batch.select("conv_id", "turn_idx", "extracted_text", "n_spans")
-        .orderBy("conv_id", "turn_idx").collect()
-    )
+    want = batch.select(*cols).orderBy("conv_id", "turn_idx").collect()
+    assert len(got) == spark.read.parquet(stream_dir).count()
     assert got == want
 
 
@@ -75,18 +80,20 @@ def test_conversation_progress_stateful(spark, stream_dir):
     )
     # the production ProcessingTimeTimeout path: registered timers keep the
     # availableNow query alive well past the data (see the operator's CAVEAT),
-    # so wait for the DATA to drain (sink row count goes quiescent), then stop
-    # — never block on termination here
+    # so wait for the DATA to drain — the source reports no data available
+    # AND the sink total stopped moving between two polls — then stop; never
+    # block on termination here
     import time
 
     rows = -1
-    for _ in range(60):
+    for _ in range(90):
         time.sleep(2)
         n = spark.table("conv_progress").count()
-        if n == rows and n > 0 and (q.lastProgress or {}).get(
-                "numInputRows", 1) == 0:
+        if n == rows and n > 0 and not q.status["isDataAvailable"]:
             break
         rows = n
+    else:
+        pytest.fail(f"stream did not quiesce: {q.status}")
     q.stop()
     # update mode emits one row per (conv, micro-batch); totals are monotonic so
     # the final state per conversation is the row-wise max
@@ -166,15 +173,35 @@ def test_progress_update_accumulates_and_rearms():
     assert state.timeout_set == 1234
 
 
+def _assert_metrics_recount(spark, out):
+    """Every batch_metrics row equals a recount over the extracted rows its
+    micro-batch committed (the observed metrics are the data's, not a guess)."""
+    from pyspark.sql import functions as F
+
+    recount = {
+        r["batch_id"]: r for r in spark.read.parquet(str(out / "extracted"))
+        .groupBy("batch_id").agg(
+            F.countDistinct("conv_id").alias("conv_ids"),
+            F.count(F.lit(1)).alias("turns"),
+            F.sum("n_spans").alias("spans"),
+            F.avg("strip_ratio").alias("strip_ratio")).collect()
+    }
+    m = spark.read.parquet(str(out / "batch_metrics")).collect()
+    assert sorted(r["batch_id"] for r in m) == sorted(recount)
+    for r in m:
+        want = recount[r["batch_id"]]
+        assert r["status"] == "done"
+        assert (r["conv_ids"], r["turns"], r["spans"]) == (
+            want["conv_ids"], want["turns"], want["spans"]), r
+        assert r["strip_ratio"] == pytest.approx(want["strip_ratio"],
+                                                 rel=0, abs=1e-12)
+    return m
+
+
 def test_stream_job_drain_and_resume(spark, tmp_path):
     """jobs/stream_job.py end-to-end: drain a directory with availableNow, then
     add more input and re-run against the SAME checkpoint — only the new files
     are processed, no duplicates (exactly-once by batch_id overwrite + WAL)."""
-    import sys
-
-    sys.path.insert(0, str(__import__("pathlib").Path(__file__).parents[1] / "jobs"))
-    from stream_job import run_stream
-
     from ocr_engine_spark.streaming.stream import TRANSCRIPTS_DDL
 
     src = tmp_path / "src"
@@ -192,27 +219,60 @@ def test_stream_job_drain_and_resume(spark, tmp_path):
     n_batches1 = got1.select("batch_id").distinct().count()
     assert n_batches1 >= 2  # maxFilesPerTrigger=1 -> several micro-batches
 
-    # metrics rows exist per batch, written after data
-    m = spark.read.parquet(str(out / "batch_metrics"))
-    assert m.count() == n_batches1
-    assert m.agg({"turns": "sum"}).collect()[0][0] == n_first
+    # metrics rows exist per batch, written after data, and recount exactly
+    m = _assert_metrics_recount(spark, out)
+    assert len(m) == n_batches1
+    assert sum(r["turns"] for r in m) == n_first
 
-    # "kill and resume": a fresh run against the same checkpoint with NEW input
-    more = spark.createDataFrame(generate_transcripts(4, seed=22),
-                                 schema=TRANSCRIPTS_DDL)
-    more.coalesce(1).write.mode("append").parquet(str(src))
-    n_more = more.count()
-    q2 = run_stream(spark, str(src), str(out), max_files_per_trigger=1,
+    # "kill and resume": a fresh run against the same checkpoint with NEW
+    # input — two files landing in ONE micro-batch, with conversation
+    # conv-000002 split across both, so the batch's distinct-conversation
+    # count must merge ids across tasks
+    more = generate_transcripts(4, seed=22)
+    split = (more["conv_id"] == "conv-000002") & (more["turn_idx"] % 2 == 1)
+    assert split.any() and ((more["conv_id"] == "conv-000002") & ~split).any()
+    for part in (more[~split], more[split]):
+        (spark.createDataFrame(part, schema=TRANSCRIPTS_DDL).coalesce(1)
+         .write.mode("append").parquet(str(src)))
+    n_more = len(more)
+    q2 = run_stream(spark, str(src), str(out), max_files_per_trigger=2,
                     available_now=True)
     q2.awaitTermination(180)
     got2 = spark.read.parquet(str(out / "extracted"))
     assert got2.count() == n_first + n_more  # old files NOT reprocessed
+    m = _assert_metrics_recount(spark, out)
+    last = max(m, key=lambda r: r["batch_id"])
+    assert len(m) == n_batches1 + 1
+    assert (last["conv_ids"], last["turns"]) == (more["conv_id"].nunique(),
+                                                 n_more)
     # per-turn content equals the batch kernel on the union corpus
     want = extract_transcripts(spark.read.parquet(str(src))).select(
         "conv_id", "turn_idx", "extracted_text").orderBy("conv_id", "turn_idx")
     gotc = got2.select("conv_id", "turn_idx", "extracted_text").orderBy(
         "conv_id", "turn_idx")
     assert [tuple(r) for r in gotc.collect()] == [tuple(r) for r in want.collect()]
+
+
+def test_stream_job_runs_two_single_stage_jobs_per_batch(spark, tmp_path):
+    """The stream job's commit is one kernel pass plus one tiny metrics write:
+    at most 2 Spark jobs per micro-batch, each a single stage — no cache
+    build and no shuffle (the metrics are observed on the data write)."""
+    from ocr_engine_spark.streaming.stream import TRANSCRIPTS_DDL
+
+    src = str(tmp_path / "src")
+    (spark.createDataFrame(generate_transcripts(6, seed=41),
+                           schema=TRANSCRIPTS_DDL)
+     .repartition(4).write.parquet(src))
+    q = run_stream(spark, src, str(tmp_path / "out"), max_files_per_trigger=2,
+                   available_now=True)
+    assert q.awaitTermination(180), "stream did not drain"
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 2
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup(str(q.runId))
+    assert 0 < len(jobs) <= 2 * len(batches), jobs
+    for j in jobs:
+        assert len(tracker.getJobInfo(j).stageIds) == 1, j
 
 
 def test_dedup_stream_drops_cross_batch_duplicates(spark, tmp_path):

@@ -1,6 +1,7 @@
 """Seeded single-core kernel micro-bench: one replayable JSON line per run.
 
-Times `kernel.pipeline.extract_frame` (no Spark, one core) over the deterministic
+Times `kernel.pipeline.extract_frame_arrow` (no Spark, one core) — the entry point
+every Spark extraction path calls per Arrow batch — over the deterministic
 generator corpus, so kernel-level perf claims are replayable instead of entangled
 with cluster/VM drift.  Appends to BENCH/kernel_history.jsonl when run from the
 repo root with --record.
@@ -34,19 +35,23 @@ def main() -> None:
                     help="append the JSON line to BENCH/kernel_history.jsonl")
     args = ap.parse_args()
 
-    from ocr_engine_spark.kernel.pipeline import extract_frame
+    import pyarrow as pa
+
+    from ocr_engine_spark.kernel.pipeline import extract_frame_arrow
     from ocr_engine_spark.sources.transcripts import generate_transcripts
 
     pdf = generate_transcripts(n_convs=args.convs, seed=args.seed, whale_factor=100)
-    n = len(pdf)
-    extract_frame(pdf.head(200))  # warm regex caches / imports
+    rb = pa.RecordBatch.from_pandas(pdf[["conv_id", "turn_idx", "text"]],
+                                    preserve_index=False)
+    n = rb.num_rows
+    extract_frame_arrow(rb.slice(0, 200))  # warm regex caches / imports
 
     best = float("inf")
     for _ in range(args.repeat):
         t0 = time.perf_counter()
-        out = extract_frame(pdf)
+        out = extract_frame_arrow(rb)
         best = min(best, time.perf_counter() - t0)
-    fmt_counts = out["fmt"].value_counts().to_dict()
+    fmt_counts = out.column("fmt").to_pandas().value_counts().to_dict()
 
     try:
         commit = subprocess.run(
