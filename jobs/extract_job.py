@@ -16,7 +16,9 @@ Local smoke run:
 
 Re-running the same command after a crash resumes: buckets whose ``run_metrics``
 row says status='done' are skipped (anti-filter), unfinished buckets are recomputed
-and idempotently overwritten (dynamic partition overwrite by bucket).
+and idempotently overwritten (dynamic partition overwrite by bucket).  Each wave
+appends its done-marker rows as one parquet file under ``run_metrics/``, counted in
+the kernel tasks while they extract, after the wave's data commits.
 """
 
 from __future__ import annotations

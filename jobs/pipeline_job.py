@@ -161,7 +161,7 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
             # extra pass over the assembled frame (explode -> two map-side-
             # combinable aggs; the shuffle never carries the bigram stream).
             from ocr_engine_spark.operators.text_analysis import (
-                lm_quality_scored,
+                LM_MIN_COUNT, lm_bigram_model, lm_quality_scored,
             )
 
             if quality_ref_mod < 2:
@@ -172,23 +172,36 @@ def run_pipeline(spark, transcripts, out_dir: str, run_id: str,
                     f"--quality-ref-mod must be >= 2, got {quality_ref_mod}")
             is_ref = (F.pmod(F.xxhash64("conv_id"),
                              F.lit(quality_ref_mod)) == 0)
-            # guard the degenerate hashed slice: with zero reference docs
-            # the model is empty, every document scores oov_rate 1.0, and
-            # the gate would silently drop the ENTIRE corpus — fail loudly
-            # instead (one cheap agg over the per-conversation frame)
-            if surv.where(is_ref).limit(1).count() == 0:
-                raise ValueError(
-                    "--quality-filter reference slice is empty (no conv_id "
-                    f"hashes to 0 mod {quality_ref_mod}); lower "
-                    "--quality-ref-mod so the bigram model has training "
-                    "documents")
-            scored = lm_quality_scored(surv.select(
+            lm_docs = surv.select(
                 F.col("conv_id").alias("doc_id"),
                 F.col("doc_text").alias("text"),
-                is_ref.alias("is_ref")))
-            lowq = (scored.where(F.col("oov_rate") > quality_max_oov)
-                    .select(F.col("doc_id").alias("conv_id"))
-                    .localCheckpoint(eager=True))
+                is_ref.alias("is_ref"))
+            # guard the degenerate model: with no bigram kept after the
+            # min-count prune, every document scores oov_rate 1.0 and the
+            # gate would silently drop the ENTIRE corpus — fail loudly
+            # instead.  The count is the job that materializes the model the
+            # scoring join then broadcasts, so the check costs no extra pass.
+            model = lm_bigram_model(lm_docs).persist()
+            try:
+                if model.count() == 0:
+                    if surv.where(is_ref).limit(1).count() == 0:
+                        raise ValueError(
+                            "--quality-filter reference slice is empty (no "
+                            f"conv_id hashes to 0 mod {quality_ref_mod}); "
+                            "lower --quality-ref-mod so the bigram model has "
+                            "training documents")
+                    raise ValueError(
+                        "--quality-filter bigram model is empty: no bigram "
+                        "of the reference slice (conv_ids hashing to 0 mod "
+                        f"{quality_ref_mod}) occurs {LM_MIN_COUNT} or more "
+                        "times; lower --quality-ref-mod so the slice holds "
+                        "more documents")
+                scored = lm_quality_scored(lm_docs, model=model)
+                lowq = (scored.where(F.col("oov_rate") > quality_max_oov)
+                        .select(F.col("doc_id").alias("conv_id"))
+                        .localCheckpoint(eager=True))
+            finally:
+                model.unpersist()
             n_lowq = lowq.count()
             surv = surv.join(lowq, "conv_id", "left_anti")
         # packing carries conv_id + doc_text THROUGH the grouped map (no

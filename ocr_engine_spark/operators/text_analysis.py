@@ -458,8 +458,28 @@ LM_HEAD_MAX_OOV = 0.005
 LM_MID_MAX_OOV = 0.03
 
 
+def _lm_bigrams(docs: DataFrame) -> DataFrame:
+    from ocr_engine_spark.operators.dedup import _shingle_array
+
+    docs = docs.withColumn("text", F.coalesce(F.col("text"), F.lit("")))
+    return docs.withColumn("sh", _shingle_array(k=2)).select(
+        "doc_id", "is_ref", F.explode("sh").alias("bigram"))
+
+
+def lm_bigram_model(docs: DataFrame,
+                    min_count: int = LM_MIN_COUNT) -> DataFrame:
+    """The ``(bigram, c)`` model ``lm_quality_scored`` trains on the
+    ``is_ref`` rows of ``docs``, pruned at ``min_count`` — for callers that
+    materialize it once, check it, and pass it back in as ``model``."""
+    return (
+        _lm_bigrams(docs).where(F.col("is_ref"))
+        .groupBy("bigram").agg(F.count(F.lit(1)).alias("c"))
+        .where(F.col("c") >= min_count))
+
+
 def lm_quality_scored(docs: DataFrame,
-                      min_count: int = LM_MIN_COUNT) -> DataFrame:
+                      min_count: int = LM_MIN_COUNT,
+                      model: DataFrame | None = None) -> DataFrame:
     """CCNet-style n-gram language-model quality scoring over a frame carrying
     (doc_id, text, is_ref boolean): train a word-bigram count model on the
     ``is_ref`` rows, score every other document by how familiar its bigrams
@@ -495,19 +515,15 @@ def lm_quality_scored(docs: DataFrame,
     coalesced to '' first — Spark's ``explode(split(NULL))`` would drop the
     row, while DuckDB's ``greatest`` skips NULLs and emits the empty shingle;
     the coalesce pins both engines to the latter.
+
+    ``model``: ``lm_bigram_model(docs, min_count)`` already built (and, in
+    the pipeline job, materialized and checked non-empty); None builds it.
     """
     from pyspark.sql.functions import broadcast
 
-    from ocr_engine_spark.operators.dedup import _shingle_array
-
-    docs = docs.withColumn("text", F.coalesce(F.col("text"), F.lit("")))
-    bg = docs.withColumn("sh", _shingle_array(k=2)).select(
-        "doc_id", "is_ref", F.explode("sh").alias("bigram"))
-    model = (
-        bg.where(F.col("is_ref"))
-        .groupBy("bigram").agg(F.count(F.lit(1)).alias("c"))
-        .where(F.col("c") >= min_count))
-    corpus = bg.where(~F.col("is_ref"))
+    if model is None:
+        model = lm_bigram_model(docs, min_count)
+    corpus = _lm_bigrams(docs).where(~F.col("is_ref"))
     per_doc = (
         corpus.join(broadcast(model), "bigram", "left")
         .groupBy("doc_id")

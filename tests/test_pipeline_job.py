@@ -242,3 +242,28 @@ def test_quality_filter_degenerate_slice_raises(spark, corpus, tmp_path):
         run_pipeline(spark, df, str(tmp_path / "q_mod1"), run_id="t23",
                      char_budget=100_000, seq_budget=256, shards=4,
                      quality_filter=True, quality_ref_mod=1)
+
+
+def test_quality_filter_pruned_empty_model_raises(spark, tmp_path):
+    """A non-empty reference slice whose bigrams all occur fewer than
+    min_count times prunes to an empty model; scoring against it would give
+    every document oov_rate 1.0 and drop the whole corpus, so the stage must
+    raise instead."""
+    convs = [f"solo_{i}" for i in range(40)]
+    hashed = dict(
+        spark.createDataFrame([(c,) for c in convs], "conv_id string")
+        .select("conv_id", F.xxhash64("conv_id").alias("h")).collect())
+    # exactly one reference document, whose tokens (hence bigrams) are all
+    # unique: every bigram in the slice occurs once, below min_count=2
+    ref_mod = next(m for m in range(2, 400)
+                   if sum(h % m == 0 for h in hashed.values()) == 1)
+    df = spark.createDataFrame(
+        [(cid, t, "user", " ".join(f"tok{cid[5:]}x{t}w{j}" for j in range(8)),
+          None, None)
+         for cid in convs for t in range(3)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    with pytest.raises(ValueError, match="bigram model is empty"):
+        run_pipeline(spark, df, str(tmp_path / "q_pruned"), run_id="t24",
+                     char_budget=100_000, seq_budget=256, shards=4,
+                     quality_filter=True, quality_ref_mod=ref_mod)

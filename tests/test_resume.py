@@ -1,14 +1,18 @@
 """Checkpoint/resume tests (SURVEY.md §5.2 item 5): a killed run resumed with the same
 run_id yields output identical to a single run, with no duplicate rows."""
 
+import glob
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from ocr_engine_spark.operators.checkpoint import (
-    done_buckets, run_extraction, with_bucket,
+    _BucketTally, done_buckets, run_extraction, with_bucket,
 )
 from ocr_engine_spark.sources.transcripts import generate_transcripts
 
@@ -27,6 +31,25 @@ def _read_sorted(spark, path):
         .orderBy("conv_id", "turn_idx")
         .collect()
     )
+
+
+def _drop_markers(metrics_path, buckets):
+    """Lose the done-markers of ``buckets``: rewrite the committed marker
+    files as one file without those buckets' rows (what a crash between a
+    bucket's data commit and its marker append leaves behind)."""
+    files = glob.glob(f"{metrics_path}/*.parquet")
+    ts = pa.timestamp("us", tz="UTC")
+    kept = pq.read_table(files)
+    kept = kept.filter(pc.invert(pc.is_in(
+        kept["p"], value_set=pa.array(sorted(buckets), pa.int32()))))
+    # pyarrow reads Spark's INT96 timestamps as tz-naive ns; write them
+    # back as the UTC micros Spark reads as TimestampType
+    for col in ("started", "finished"):
+        kept = kept.set_column(kept.schema.get_field_index(col), col,
+                               kept[col].cast(ts))
+    for f in files:
+        os.remove(f)
+    pq.write_table(kept, f"{metrics_path}/part-rewritten.parquet")
 
 
 def test_full_run_then_resume_noop(spark, transcripts_df, tmp_path):
@@ -49,10 +72,10 @@ def test_kill_and_resume_exactly_once(spark, transcripts_df, tmp_path):
     full = run_extraction(spark, transcripts_df, out_full, "rA", n_buckets=N_BUCKETS)
     want = _read_sorted(spark, full["data_path"])
 
-    # simulate a crash: run fully, then delete metrics AND data for 3 buckets
+    # simulate a crash: run fully, then delete markers AND data for 3 buckets
     killed = run_extraction(spark, transcripts_df, out_killed, "rA", n_buckets=N_BUCKETS)
+    _drop_markers(killed["metrics_path"], (1, 4, 6))
     for p in (1, 4, 6):
-        shutil.rmtree(f"{killed['metrics_path']}/p={p}")
         shutil.rmtree(f"{killed['data_path']}/p={p}")
     assert done_buckets(spark, killed["metrics_path"]) == set(range(N_BUCKETS)) - {1, 4, 6}
 
@@ -70,7 +93,7 @@ def test_crash_between_data_and_metrics_reruns_bucket(spark, transcripts_df, tmp
     out = str(tmp_path / "partial")
     s = run_extraction(spark, transcripts_df, out, "rB", n_buckets=N_BUCKETS)
     want = _read_sorted(spark, s["data_path"])
-    shutil.rmtree(f"{s['metrics_path']}/p=2")  # metrics lost, data present
+    _drop_markers(s["metrics_path"], (2,))  # marker lost, data present
     resumed = run_extraction(spark, transcripts_df, out, "rB", n_buckets=N_BUCKETS)
     assert resumed["buckets_run"] == 1
     assert _read_sorted(spark, resumed["data_path"]) == want
@@ -89,43 +112,103 @@ def test_metrics_lineage_content(spark, transcripts_df, tmp_path):
                               "strip_ratio", "started", "finished", "status", "p"}
 
 
-def test_metrics_read_back_only_wave_columns(spark, transcripts_df, tmp_path,
-                                             monkeypatch):
-    """Each wave's metrics read back only that wave's committed ``p=``
-    directories, pruned to the four columns they aggregate: never a second
-    full pass over the output the run just wrote."""
+def test_run_never_reads_its_output(spark, transcripts_df, tmp_path,
+                                    monkeypatch):
+    """The done-markers come from the kernel tasks: no parquet read during
+    a run touches the extracted output it writes."""
     from pyspark.sql import DataFrameReader
 
-    import ocr_engine_spark.operators.checkpoint as cp
-    from ocr_engine_spark.plans import read_schemas
-
-    out = str(tmp_path / "readback")
-    data_path = f"{out}/extracted"
-    read_paths, metrics_scans = [], []
-    real_read, real_write = DataFrameReader.parquet, cp.overwrite_partitions
+    out = str(tmp_path / "noread")
+    read_paths = []
+    real_read = DataFrameReader.parquet
 
     def read_spy(self, *paths, **kw):
-        read_paths.append(sorted(paths))
+        read_paths.extend(paths)
         return real_read(self, *paths, **kw)
 
-    def write_spy(df, target, partition_col, flavor="auto"):
-        if target == f"{out}/run_metrics":
-            metrics_scans.extend(read_schemas(df))
-        return real_write(df, target, partition_col, flavor)
-
     monkeypatch.setattr(DataFrameReader, "parquet", read_spy)
-    monkeypatch.setattr(cp, "overwrite_partitions", write_spy)
     run_extraction(spark, transcripts_df, out, "rD", n_buckets=N_BUCKETS,
                    wave_buckets=3)
-    waves = ([0, 1, 2], [3, 4, 5], [6, 7])
-    assert read_paths == [[f"{data_path}/p={p}" for p in w] for w in waves]
-    assert metrics_scans == (
-        ["struct<conv_id:string,n_spans:int,strip_ratio:double>"] * len(waves))
+    # resume-time reads of run_metrics are fine; nothing under extracted/
+    assert not [p for p in read_paths if p.startswith(f"{out}/extracted")]
+
+
+def test_markers_match_recount_of_committed_data(spark, transcripts_df,
+                                                 tmp_path):
+    """Every marker row equals a recount of its bucket's committed rows
+    (whale corpus, three waves), and each wave appended one marker file."""
+    out = str(tmp_path / "recount")
+    s = run_extraction(spark, transcripts_df, out, "rR", n_buckets=N_BUCKETS,
+                       wave_buckets=3)
+    assert len(glob.glob(f"{s['metrics_path']}/*.parquet")) == 3
+    markers = {r.p: r for r in spark.read.parquet(s["metrics_path"]).collect()}
+    recount = {r.p: r for r in (
+        spark.read.parquet(s["data_path"]).groupBy("p").agg(
+            F.countDistinct("conv_id").alias("conv_ids"),
+            F.count(F.lit(1)).alias("turns"),
+            F.sum("n_spans").alias("spans"),
+            F.avg("strip_ratio").alias("strip_ratio")).collect())}
+    assert set(markers) == set(recount) == set(range(N_BUCKETS))
+    for p, want in recount.items():
+        got = markers[p]
+        assert (got.conv_ids, got.turns, got.spans) == (
+            want.conv_ids, want.turns, want.spans), p
+        assert got.strip_ratio == pytest.approx(want.strip_ratio, abs=1e-12)
+        assert got.status == "done" and got.run_id == "rR"
+        assert got.started <= got.finished
+
+
+def test_bucket_tally_merges_duplicate_report_by_replacement():
+    """A retried or duplicate task re-reports its buckets' full counts; the
+    merge replaces them instead of adding them twice."""
+    param = _BucketTally()
+    report = {3: (2, 10, 7, 1.5, 10)}
+    acc = param.addInPlace(param.zero({}), report)
+    acc = param.addInPlace(acc, {5: (1, 4, 0, 0.0, 4)})
+    acc = param.addInPlace(acc, dict(report))
+    assert acc == {3: (2, 10, 7, 1.5, 10), 5: (1, 4, 0, 0.0, 4)}
+
+
+def test_resume_sees_markers_without_os_path(spark, transcripts_df, tmp_path,
+                                             monkeypatch):
+    """The resume checks go through the Hadoop FileSystem of the output
+    path, not ``os.path``: with os.path's probes blind, a resume still sees
+    every committed bucket (an hdfs/s3a output would look like this)."""
+    import types
+
+    import ocr_engine_spark.operators.checkpoint as cp
+
+    out = str(tmp_path / "fs")
+    run_extraction(spark, transcripts_df, out, "rF", n_buckets=N_BUCKETS,
+                   wave_buckets=3)
+    blind = types.SimpleNamespace(path=types.SimpleNamespace(
+        join=os.path.join, exists=lambda p: False, isdir=lambda p: False))
+    monkeypatch.setattr(cp, "os", blind)
+    assert done_buckets(spark, f"{out}/run_metrics") == set(range(N_BUCKETS))
+    resumed = run_extraction(spark, transcripts_df, out, "rF",
+                             n_buckets=N_BUCKETS, wave_buckets=3)
+    assert resumed["buckets_done_before"] == N_BUCKETS
+    assert resumed["buckets_run"] == 0
+
+
+def test_old_per_bucket_marker_layout_raises(spark, transcripts_df, tmp_path):
+    """A run_metrics holding the earlier per-bucket ``p=*`` directories
+    cannot take a root-level marker file (every later read would fail on
+    conflicting directory structures): resuming it names a fresh out_dir."""
+    out = str(tmp_path / "old")
+    old = spark.createDataFrame(
+        [("r0", 1, 2, 3, 0.5, "done", 0)],
+        "run_id string, conv_ids long, turns long, spans long, "
+        "strip_ratio double, status string, p int")
+    old.write.partitionBy("p").parquet(f"{out}/run_metrics")
+    with pytest.raises(ValueError, match="fresh out_dir"):
+        run_extraction(spark, transcripts_df, out, "rO", n_buckets=N_BUCKETS)
+    assert not os.path.exists(f"{out}/extracted")
 
 
 def test_empty_input_and_empty_buckets(spark, transcripts_df, tmp_path):
-    """A bucket with no rows writes no ``p=`` directory: the metrics read-back
-    skips it, and a wave with no rows at all writes no done-markers."""
+    """A bucket with no rows writes no ``p=`` directory and gets no marker,
+    and a wave with no rows at all appends no marker file."""
     empty = run_extraction(spark, transcripts_df.limit(0),
                            str(tmp_path / "empty"), "rE", n_buckets=N_BUCKETS)
     assert done_buckets(spark, empty["metrics_path"]) == set()
@@ -139,6 +222,8 @@ def test_empty_input_and_empty_buckets(spark, transcripts_df, tmp_path):
     assert done_buckets(spark, s["metrics_path"]) == keep
     assert {d for d in os.listdir(s["data_path"]) if d.startswith("p=")} == {
         f"p={p}" for p in keep}
+    # one marker file per wave that had rows; the all-empty wave adds none
+    assert len(glob.glob(f"{s['metrics_path']}/*.parquet")) == 2
     assert spark.read.parquet(s["metrics_path"]).agg(
         F.sum("turns")).first()[0] == sparse.count()
 
@@ -201,10 +286,10 @@ def test_wave_mode_output_identical(spark, transcripts_df, tmp_path):
     assert done_buckets(spark, s2["metrics_path"]) == set(range(N_BUCKETS))
 
 
-def test_wave_mode_crash_keeps_committed_waves(spark, transcripts_df, tmp_path,
-                                               monkeypatch):
-    """A REAL mid-run failure (the commit call itself dies during wave 2) must
-    durably keep wave 1 — resume then recomputes only what never committed."""
+def _crash_in_wave_two(spark, transcripts_df, tmp_path, monkeypatch, name):
+    """Run three waves with ``checkpoint.<name>`` dying on its second call
+    (wave 2's write), then check exactly wave 1 survived and a resume
+    completes the run without duplicates."""
     import ocr_engine_spark.operators.checkpoint as cp
 
     out = str(tmp_path / "crashy")
@@ -213,20 +298,20 @@ def test_wave_mode_crash_keeps_committed_waves(spark, transcripts_df, tmp_path,
         run_extraction(spark, transcripts_df, str(tmp_path / "baseline"), "rC",
                        n_buckets=N_BUCKETS)["data_path"])
 
-    real_write = cp.overwrite_partitions
+    real_write = getattr(cp, name)
     calls = {"n": 0}
 
-    def dying_write(df, target, partition_col, flavor="auto"):
+    def dying_write(df, target, *args, **kw):
         calls["n"] += 1
-        if calls["n"] == 3:  # wave 1 = calls 1 (data) + 2 (metrics); die in wave 2
+        if calls["n"] == 2:  # wave 1's write passes; wave 2's dies
             raise RuntimeError("injected executor loss")
-        return real_write(df, target, partition_col, flavor)
+        return real_write(df, target, *args, **kw)
 
-    monkeypatch.setattr(cp, "overwrite_partitions", dying_write)
+    monkeypatch.setattr(cp, name, dying_write)
     with pytest.raises(RuntimeError, match="injected"):
         run_extraction(spark, transcripts_df, out, "rC",
                        n_buckets=N_BUCKETS, wave_buckets=3)
-    monkeypatch.setattr(cp, "overwrite_partitions", real_write)
+    monkeypatch.setattr(cp, name, real_write)
 
     committed = done_buckets(spark, f"{out}/run_metrics")
     assert committed == {0, 1, 2}  # exactly wave 1 survived the crash
@@ -235,6 +320,24 @@ def test_wave_mode_crash_keeps_committed_waves(spark, transcripts_df, tmp_path,
                              n_buckets=N_BUCKETS, wave_buckets=3)
     assert resumed["buckets_done_before"] == 3
     assert _read_sorted(spark, resumed["data_path"]) == want
+    assert spark.read.parquet(f"{out}/run_metrics").agg(
+        F.sum("turns")).first()[0] == transcripts_df.count()
+
+
+def test_wave_mode_crash_keeps_committed_waves(spark, transcripts_df, tmp_path,
+                                               monkeypatch):
+    """A REAL mid-run failure (wave 2's data write dies) must durably keep
+    wave 1 — resume then recomputes only what never committed."""
+    _crash_in_wave_two(spark, transcripts_df, tmp_path, monkeypatch,
+                       "overwrite_partitions")
+
+
+def test_wave_mode_marker_crash_keeps_committed_waves(spark, transcripts_df,
+                                                      tmp_path, monkeypatch):
+    """Wave 2's data commits but its marker append dies: wave 2 has no
+    markers, so it counts as not done and its buckets rerun on resume."""
+    _crash_in_wave_two(spark, transcripts_df, tmp_path, monkeypatch,
+                       "append_table")
 
 
 def test_wave_buckets_below_one_raises(spark, transcripts_df, tmp_path):

@@ -6,7 +6,7 @@ Orchestrates the full failure story end to end, with nothing simulated:
    tools/bench_cluster.py topology), engine shipped via ``--py-files``;
 2. submit ``jobs/extract_job.py --wave-buckets W`` over the 1.14M-turn bench
    corpus, then SIGKILL the ENTIRE driver process group as soon as the first
-   wave's metrics commit lands — a hard driver loss mid-run;
+   wave's marker file lands — a hard driver loss mid-run;
 3. resubmit the identical command: the run resumes from the per-wave
    checkpoint (``buckets_done_before`` > 0) instead of recomputing;
 4. run the same job on a fresh output dir with no kill (the control) and
@@ -59,10 +59,14 @@ def _submit_cmd(input_path: str, out_dir: str, zip_path: pathlib.Path) -> list[s
 
 
 def _committed_buckets(metrics_dir: pathlib.Path) -> int:
-    if not metrics_dir.exists():
+    """Distinct ``p`` over the committed done-marker files (one per wave;
+    a file appears only at its job commit)."""
+    import pyarrow.parquet as pq
+
+    files = [str(f) for f in metrics_dir.glob("part-*.parquet")]
+    if not files:
         return 0
-    done = [d for d in metrics_dir.glob("p=*") if any(d.glob("*.parquet"))]
-    return len(done)
+    return len(pq.read_table(files, columns=["p"]).column("p").unique())
 
 
 def _summary_line(stdout: str) -> dict:
